@@ -2,12 +2,12 @@ package graft.parser
 
 import java.util.UUID
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.model.{AttrCodec, SerializedData}
-import graft.operators.Closure
 import graft.spans.SpansOps._
 
 /** Span→summary parser (SURVEY §2 Group B, §3.2): the Spark re-expression of
@@ -15,14 +15,14 @@ import graft.spans.SpansOps._
   * (`composable_logs/opentelemetry_task_span_parser.py:413-445`).
   *
   * Structural difference from the reference (SURVEY §4.1): the reference
-  * re-walks the whole span list once per task (O(tasks × spans)); here every
-  * span is tagged with ALL of its owning `execute-task` ancestors in one
-  * bounded iterative closure ([[Closure.descendantsWithRoots]], O(spans ×
-  * depth) with depth ≤ ~6), after which each extraction is a single
-  * grouped/filtered pass. The summary object itself is driver-sized by
-  * contract (it is the reference's whole output); the scale path for large
-  * logs is the intermediate DataFrames exposed by [[taggedSpans]] /
-  * [[namedValuesDF]] / [[artifactsDF]].
+  * re-walks the whole span list once per task (O(tasks × spans)); here each
+  * trace's spans build one [[SpanTree]] and every span walks its own
+  * `execute-task` ancestors once (O(spans × depth), depth ≤ ~6).
+  * [[parseSpans]] does that walk on the driver over ONE collected
+  * projection — the summary is driver-sized by contract (it is the
+  * reference's whole output). The distributed views over many runs —
+  * [[taggedSpans]], [[namedValuesDF]], [[artifactsDF]], [[taskRunsDF]] —
+  * do the same walk per trace in a generator after one shuffle by trace.
   */
 object SpanParser {
 
@@ -52,9 +52,8 @@ object SpanParser {
     *
     * Spans are partitionable by trace (one workflow run per trace — the
     * same bound the reference assumes by holding a run's spans in one
-    * list), so ownership is ONE shuffle + an in-memory ancestor walk per
-    * trace, not a per-depth iterative join. [[Closure.descendantsWithRoots]]
-    * remains the fallback for pathological single-trace volumes. */
+    * list), so ownership is ONE shuffle + an in-memory [[SpanTree]] walk
+    * per trace, not a per-depth iterative join. */
   def taggedSpans(spans: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     spans
@@ -75,6 +74,50 @@ object SpanParser {
       .select(col("task_span_id"), col("id"))
   }
 
+  /** One trace's span tree: the inclusive `execute-task` ancestor walk
+    * shared by [[OwnershipGen]], [[TaskRunsGen]] and [[parseSpans]]. Its
+    * edge semantics are theirs: callers skip null span ids (such a span
+    * owns and is owned by nothing), a span with a null name is added as a
+    * non-task, and a visited set ends `parent_id` cycles in malformed input
+    * (the reference assumes acyclicity; we guard instead of spinning). A
+    * span id added twice keeps its last non-null parent. */
+  private final class SpanTree {
+    private val parentOf = new java.util.HashMap[String, String]()
+    private val tasks = new java.util.HashSet[String]()
+    private val seen = new java.util.HashMap[String, Integer]()
+
+    def add(sid: String, parent: String, isTask: Boolean): Unit = {
+      if (parent != null) parentOf.put(sid, parent)
+      if (isTask) tasks.add(sid)
+      seen.merge(sid, 1, (a: Integer, b: Integer) => a + b)
+    }
+
+    /** Adds one generator element, `struct<sid, parent_id, is_task, ...>`;
+      * returns its span id, or null when it has none. */
+    def add(e: org.apache.spark.sql.catalyst.InternalRow): String =
+      if (e.isNullAt(0)) null
+      else {
+        val sid = e.getUTF8String(0).toString
+        add(sid, if (e.isNullAt(1)) null else e.getUTF8String(1).toString,
+          !e.isNullAt(2) && e.getBoolean(2))
+        sid
+      }
+
+    /** How many times `sid` was added. */
+    def occurrences(sid: String): Int = seen.getOrDefault(sid, 0)
+
+    /** `f` on each `execute-task` ancestor of `sid`, itself included,
+      * nearest first. */
+    def foreachOwner(sid: String)(f: String => Unit): Unit = {
+      val visited = new java.util.HashSet[String]()
+      var cur = sid
+      while (cur != null && visited.add(cur)) {
+        if (tasks.contains(cur)) f(cur)
+        cur = parentOf.get(cur)
+      }
+    }
+  }
+
   /** Generator emitting (task_span_id, id) ownership pairs for one trace's
     * spans: every span labeled with each `execute-task` ancestor
     * (inclusive). Input: `array<struct<sid string, parent_id string,
@@ -85,6 +128,7 @@ object SpanParser {
       with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
 
     override def elementSchema: StructType = StructType(Seq(
       StructField("task_span_id", StringType, nullable = false),
@@ -94,35 +138,17 @@ object SpanParser {
       val arr = child.eval(input)
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       val n = arr.numElements()
-      val parentOf = new java.util.HashMap[String, String](n * 2)
-      val isTask = new java.util.HashSet[String]()
+      val tree = new SpanTree
       val ids = new Array[String](n)
       var i = 0
       while (i < n) {
-        val e = arr.getStruct(i, 3)
-        // a null span id (SpanSource tolerates malformed contexts) owns and
-        // is owned by nothing — skip, don't NPE
-        if (!e.isNullAt(0)) {
-          val sid = e.getUTF8String(0).toString
-          ids(i) = sid
-          if (!e.isNullAt(1)) parentOf.put(sid, e.getUTF8String(1).toString)
-          if (!e.isNullAt(2) && e.getBoolean(2)) isTask.add(sid)
-        }
+        ids(i) = tree.add(arr.getStruct(i, 3))
         i += 1
       }
       val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      ids.filter(_ != null).foreach { sid =>
-        val visited = new java.util.HashSet[String]()
-        var cur: String = sid
-        // visited-set terminates parent_id cycles in malformed input
-        // (the reference assumes acyclicity; we guard instead of spinning)
-        while (cur != null && visited.add(cur)) {
-          if (isTask.contains(cur)) {
-            out += InternalRow(
-              org.apache.spark.unsafe.types.UTF8String.fromString(cur),
-              org.apache.spark.unsafe.types.UTF8String.fromString(sid))
-          }
-          cur = parentOf.get(cur)
+      ids.foreach { sid =>
+        if (sid != null) tree.foreachOwner(sid) { t =>
+          out += InternalRow(UTF8String.fromString(t), UTF8String.fromString(sid))
         }
       }
       out
@@ -131,17 +157,6 @@ object SpanParser {
     override protected def withNewChildInternal(
         newChild: org.apache.spark.sql.catalyst.expressions.Expression) =
       copy(child = newChild)
-  }
-
-  /** Iterative-join variant of [[taggedSpans]] (no per-trace memory
-    * bound). NOT selected automatically — call it in place of
-    * [[taggedSpans]] when a single trace is too large for one executor's
-    * memory. */
-  def taggedSpansIterative(spans: DataFrame): DataFrame = {
-    val roots = spans.filterNested(Seq("name"), "execute-task")
-      .select(col("context.span_id"))
-    Closure.descendantsWithRoots(spans.spanEdges(), roots, inclusive = true)
-      .withColumnRenamed("root", "task_span_id")
   }
 
   /** Payload spans (`named-value` / `artefact`, status OK) joined to their
@@ -159,159 +174,135 @@ object SpanParser {
   def artifactsDF(spans: DataFrame): DataFrame =
     payloadDF(spans, taggedSpans(spans), "artefact")
 
-  /** The full parse (B3/B4): spans → [[WorkflowSummary]]. */
-  def parseSpans(spans0: DataFrame): WorkflowSummary = {
-    val spans = spans0.persist(StorageLevel.MEMORY_AND_DISK)
-    try parseSpansImpl(spans)
-    finally spans.unpersist(blocking = false)
-  }
+  /** Spans whose attributes the parse reads whole; every other span
+    * contributes only its `task.*` / `workflow.*` keys. */
+  private val WholeAttrSpans = Seq("named-value", "artefact", "task-dependency")
 
-  private def parseSpansImpl(spans: DataFrame): WorkflowSummary = {
-    val pairs = taggedSpans(spans).persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
+  /** The full parse (B3/B4): spans → [[WorkflowSummary]], as ONE Spark
+    * job and one driver pass.
+    *
+    * The job collects one narrow row per span: ids, name, times, status
+    * code, its exception events, and its attributes (whole on payload and
+    * dependency spans, cut to `task.*` / `workflow.*` keys elsewhere). The
+    * pass builds each trace's [[SpanTree]], credits every span to its
+    * owning tasks, and assembles the summary. Ownership is keyed by
+    * (trace, span id), as in [[taggedSpans]] and [[taskRunsDF]]: a span id
+    * that repeats in another trace is another span. The input is read
+    * once and never persisted, so a caller's own cache is left as it was. */
+  def parseSpans(spans: DataFrame): WorkflowSummary = {
+    val rows = spans.select(
+        col("context.trace_id"), col("context.span_id"), col("parent_id"),
+        col("name"), col("start_time"), col("end_time"),
+        col("status.status_code"),
+        when(col("name").isin(WholeAttrSpans: _*), col("attributes"))
+          .otherwise(map_filter(col("attributes"), (k, _) =>
+            k.startsWith("task.") || k.startsWith("workflow."))),
+        filter(col("events"), e => e.getField("name") === "exception"))
+      .collect()
 
-    // ONE ownership join, reused by all four extraction passes below (task
-    // attrs, exceptions, named values, artifacts) — re-deriving it per pass
-    // re-ran the join 4× even with both inputs cached
-    val owned = spans.join(pairs, col("context.span_id") === col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val trees = mutable.HashMap.empty[String, SpanTree]
+    rows.foreach { r =>
+      if (!r.isNullAt(1)) trees.getOrElseUpdate(r.getString(0), new SpanTree)
+        .add(r.getString(1), r.getString(2), r.getString(3) == "execute-task")
+    }
 
-    try {
-      // ONE extraction job: the four passes (task attributes, exceptions,
-      // named values, artifacts) are projected to a common shape, unioned,
-      // and collected together — separately they cost a job submission and
-      // a cluster-side orderBy shuffle each; the deterministic ordering the
-      // assembly needs is applied driver-side on the (driver-sized) rows.
-      // Columns: kind, task, o1, o2, m, n, t — see each branch.
-      val nullMap = lit(null).cast("map<string,string>")
-      val attrBranch = owned
-        .select(col("task_span_id"), explode(map_entries(col("attributes"))).as("kv"))
-        .select(lit("attr").as("kind"), col("task_span_id").as("task"),
-          col("kv.key").as("o1"), col("kv.value").as("o2"),
-          nullMap.as("m"), lit(null).cast("string").as("n"),
-          lit(null).cast("string").as("t"))
-        .filter(col("o1").startsWith("task."))
-      val excBranch = owned
-        .select(col("task_span_id"), col("start_time"),
-          col("context.span_id").as("sid"), explode(col("events")).as("e"))
-        .filter(col("e.name") === "exception")
-        .select(lit("exc").as("kind"), col("task_span_id").as("task"),
-          col("start_time").as("o1"), col("sid").as("o2"),
-          col("e.attributes").as("m"), col("e.name").as("n"),
-          col("e.timestamp").as("t"))
-      def payloadBranch(kind: String, spanName: String) =
-        payloadFromOwned(owned, spanName)
-          .select(lit(kind).as("kind"), col("task_span_id").as("task"),
-            col("start_time").as("o1"), col("span_id").as("o2"),
-            col("attributes").as("m"), lit(null).cast("string").as("n"),
-            lit(null).cast("string").as("t"))
-      val nullStr = lit(null).cast("string")
-      // workflow.* attribute entries across ALL spans (B3 attributesUnion);
-      // distinct BEFORE the collect so driver traffic scales with distinct
-      // (key, value) pairs, not span count
-      val wattrBranch = spans
-        .select(explode_outer(map_entries(col("attributes"))).as("kv"))
-        .select(col("kv.key").as("k"), col("kv.value").as("v"))
-        .filter(col("k").isNotNull && col("k").startsWith("workflow."))
-        .distinct()
-        .select(lit("wattr").as("kind"), nullStr.as("task"),
-          col("k").as("o1"), col("v").as("o2"),
-          nullMap.as("m"), nullStr.as("n"), nullStr.as("t"))
-      // B1 legacy task-dependency pairs (distinct: same reasoning)
-      val depBranch = spans.filterNested(Seq("name"), "task-dependency")
-        .select(
-          col("attributes").getItem("from_task_span_id").as("f"),
-          col("attributes").getItem("to_task_span_id").as("t0"))
-        .distinct()
-        .select(lit("dep").as("kind"), nullStr.as("task"),
-          col("f").as("o1"), col("t0").as("o2"),
-          nullMap.as("m"), nullStr.as("n"), nullStr.as("t"))
-      // execute-task spans themselves (B3 assembly skeleton)
-      val tspanBranch = spans.filterNested(Seq("name"), "execute-task")
-        .select(lit("tspan").as("kind"), col("context.span_id").as("task"),
-          col("start_time").as("o1"), col("end_time").as("o2"),
-          nullMap.as("m"), nullStr.as("n"), nullStr.as("t"))
+    // One pass over the spans in collect order. A task is keyed by
+    // (trace, task span id); each span is credited to every owning task
+    // once per occurrence of its id in the trace — the multiplicity of
+    // the (task, span) pairs [[taggedSpans]] emits.
+    type Task = (String, String)
+    var minStart, maxEnd: String = null
+    val workflowRaws = mutable.LinkedHashMap.empty[String, mutable.LinkedHashSet[String]]
+    val taskRaws = mutable.LinkedHashMap.empty[(Task, String), mutable.LinkedHashSet[String]]
+    val excRows, valueRows, artifactRows = mutable.ArrayBuffer.empty[(Task, Row)]
+    val taskSpans = mutable.ArrayBuffer.empty[Row]
+    val depRaws = mutable.LinkedHashSet.empty[(String, String)]
+    rows.foreach { r =>
+      val (trace, sid, name) = (r.getString(0), r.getString(1), r.getString(3))
+      val attrs: collection.Map[String, String] =
+        if (r.isNullAt(7)) Map.empty else r.getMap[String, String](7)
       // B4 timing: min/max over ALL spans; the reference compares ISO
       // strings lexicographically, which is order-correct for the fixed
-      // format. Folded into the union as a one-row aggregate branch so the
-      // whole parse is a SINGLE collect job (it used to submit its own).
-      val timingBranch = spans
-        .agg(min(col("start_time")).as("o1"), max(col("end_time")).as("o2"))
-        .select(lit("timing").as("kind"), nullStr.as("task"),
-          col("o1"), col("o2"), nullMap.as("m"), nullStr.as("n"),
-          nullStr.as("t"))
-      val extracted = attrBranch
-        .unionByName(excBranch)
-        .unionByName(payloadBranch("nv", "named-value"))
-        .unionByName(payloadBranch("art", "artefact"))
-        .unionByName(wattrBranch)
-        .unionByName(depBranch)
-        .unionByName(tspanBranch)
-        .unionByName(timingBranch)
-        .collect()
-        .groupBy(_.getString(0))
-
-      val timing = extracted.getOrElse("timing", Array.empty[Row]).headOption
-        .map(r => Timing(r.getString(2), r.getString(3)))
-        .getOrElse(Timing(null, null))
-
-      // B3 workflow attribute union (same conflict contract as
-      // SpansOps.attributesUnion, applied driver-side to the wattr rows)
-      val workflowAttributes: Map[String, Any] = extracted
-        .getOrElse("wattr", Array.empty[Row])
-        .groupBy(_.getString(2))
-        .map { case (k, rows) => k -> resolveAttr(k, rows.map(_.getString(3))) }
-      val topSpanId: String =
-        workflowAttributes.get("workflow.workflow_run_id") match {
-          case Some(s: String) => s
-          case _ => "NO-TOP-SPAN--TEMP" + UUID.randomUUID().toString
+      // format
+      val (start, end) = (r.getString(4), r.getString(5))
+      if (start != null && (minStart == null || start < minStart)) minStart = start
+      if (end != null && (maxEnd == null || end > maxEnd)) maxEnd = end
+      attrs.foreach { case (k, v) =>
+        if (k.startsWith("workflow."))
+          workflowRaws.getOrElseUpdate(k, mutable.LinkedHashSet.empty) += v
+      }
+      if (name == "execute-task") taskSpans += r
+      if (name == "task-dependency")
+        depRaws += ((attrs.getOrElse("from_task_span_id", null),
+          attrs.getOrElse("to_task_span_id", null)))
+      if (sid != null) {
+        val tree = trees(trace)
+        val owners = mutable.ArrayBuffer.empty[Task]
+        tree.foreachOwner(sid)(t => owners += ((trace, t)))
+        val payload = r.getString(6) == "OK" &&
+          (name == "named-value" || name == "artefact")
+        val hasExc = !r.isNullAt(8) && r.getSeq[Row](8).nonEmpty
+        for (_ <- 0 until tree.occurrences(sid); task <- owners) {
+          attrs.foreach { case (k, v) =>
+            if (k.startsWith("task."))
+              taskRaws.getOrElseUpdate((task, k), mutable.LinkedHashSet.empty) += v
+          }
+          if (hasExc) excRows += ((task, r))
+          if (payload)
+            (if (name == "named-value") valueRows else artifactRows) += ((task, r))
         }
+      }
+    }
 
-      // Task-subtree attribute union with per-(task, key) conflict detection.
-      val taskAttrs: Map[String, Map[String, Any]] = extracted
-        .getOrElse("attr", Array.empty[Row])
-        .groupBy(r => (r.getString(1), r.getString(2)))
-        .toSeq
-        .map { case ((task, k), rows) =>
-          (task, k, resolveAttr(k, rows.map(_.getString(3))))
+    val timing = Timing(minStart, maxEnd)
+
+    // B3 workflow attribute union (same conflict contract as
+    // SpansOps.attributesUnion)
+    val workflowAttributes: Map[String, Any] = workflowRaws.iterator
+      .map { case (k, raws) => k -> resolveAttr(k, raws.toSeq) }.toMap
+    val topSpanId: String =
+      workflowAttributes.get("workflow.workflow_run_id") match {
+        case Some(s: String) => s
+        case _ => "NO-TOP-SPAN--TEMP" + UUID.randomUUID().toString
+      }
+
+    // Task-subtree attribute union with per-(task, key) conflict detection.
+    val taskAttrs: Map[Task, Map[String, Any]] = taskRaws.toSeq
+      .map { case ((task, k), raws) => (task, k, resolveAttr(k, raws.toSeq)) }
+      .groupBy(_._1)
+      .map { case (task, entries) => task -> entries.map(e => e._2 -> e._3).toMap }
+
+    // Each task's spans in a deterministic order: by (start_time, span_id),
+    // null-tolerant — SpanSource tolerates missing start_time/span_id and
+    // a raw String Ordering NPEs on null. The sort is stable: ties keep
+    // their collect order.
+    def byTask(rows: mutable.ArrayBuffer[(Task, Row)]): Map[Task, Seq[Row]] =
+      rows.toSeq
+        .sortBy { case (_, r) =>
+          (Option(r.getString(4)).getOrElse(""), Option(r.getString(1)).getOrElse(""))
         }
         .groupBy(_._1)
-        .map { case (task, entries) =>
-          task -> entries.map(e => e._2 -> e._3).toMap
-        }
+        .map { case (task, rs) => task -> rs.map(_._2) }
 
-      // Exceptions per task (deterministic order by emitting span's time).
-      val taskExceptions: Map[String, Seq[Map[String, Any]]] = extracted
-        .getOrElse("exc", Array.empty[Row])
-        // null-tolerant key: SpanSource tolerates missing start_time/span_id
-        // (same guard as the tspan branch's safeEpochUs sort below) — a raw
-        // String Ordering NPEs on null and would crash the whole parse
-        .sortBy(r => (Option(r.getString(2)).getOrElse(""),
-          Option(r.getString(3)).getOrElse("")))
-        .groupBy(_.getString(1))
-        .map { case (task, rows) =>
-          task -> rows.toSeq.map { r =>
-            Map[String, Any](
-              "name" -> r.getString(5),
-              "timestamp" -> r.getString(6),
-              "attributes" -> AttrCodec.parseMap(
-                r.getMap[String, String](4).toMap))
-          }
+    // Exceptions per task, in event order within a span.
+    val taskExceptions: Map[Task, Seq[Map[String, Any]]] =
+      byTask(excRows).map { case (task, rs) =>
+        task -> rs.flatMap(_.getSeq[Row](8)).map { e =>
+          Map[String, Any](
+            "name" -> e.getAs[String]("name"),
+            "timestamp" -> e.getAs[String]("timestamp"),
+            "attributes" -> AttrCodec.parseMap(
+              e.getAs[collection.Map[String, String]]("attributes").toMap))
         }
+      }
 
-      // B6 named values: exact attr key set + duplicate-name rejection.
-      val taskValues: Map[String, Map[String, LoggedValueContent]] = extracted
-        .getOrElse("nv", Array.empty[Row])
-        // null-tolerant key: SpanSource tolerates missing start_time/span_id
-        // (same guard as the tspan branch's safeEpochUs sort below) — a raw
-        // String Ordering NPEs on null and would crash the whole parse
-        .sortBy(r => (Option(r.getString(2)).getOrElse(""),
-          Option(r.getString(3)).getOrElse("")))
-        .groupBy(_.getString(1))
-        .map { case (task, rows) =>
-          val seen = scala.collection.mutable.LinkedHashMap.empty[String, LoggedValueContent]
-          rows.foreach { r =>
-            val attrs = r.getMap[String, String](4).toMap
+    // B6 named values: exact attr key set + duplicate-name rejection.
+    val taskValues: Map[Task, Map[String, LoggedValueContent]] =
+      byTask(valueRows)
+        .map { case (task, rs) =>
+          val seen = mutable.LinkedHashMap.empty[String, LoggedValueContent]
+          rs.foreach { r =>
+            val attrs = r.getMap[String, String](7).toMap
             require(attrs.keySet == Set("name", "type", "encoding", "content_encoded"),
               s"named-value span has unexpected attribute keys: ${attrs.keySet}")
             val parsed = AttrCodec.parseMap(attrs)
@@ -327,18 +318,12 @@ object SpanParser {
           task -> seen.toMap
         }
 
-      // B5 artifacts (+ notebook.html derivation flatMap).
-      val taskArtifacts: Map[String, Seq[ArtifactContent]] = extracted
-        .getOrElse("art", Array.empty[Row])
-        // null-tolerant key: SpanSource tolerates missing start_time/span_id
-        // (same guard as the tspan branch's safeEpochUs sort below) — a raw
-        // String Ordering NPEs on null and would crash the whole parse
-        .sortBy(r => (Option(r.getString(2)).getOrElse(""),
-          Option(r.getString(3)).getOrElse("")))
-        .groupBy(_.getString(1))
-        .map { case (task, rows) =>
-          task -> rows.toSeq.flatMap { r =>
-            val parsed = AttrCodec.parseMap(r.getMap[String, String](4).toMap)
+    // B5 artifacts (+ notebook.html derivation flatMap).
+    val taskArtifacts: Map[Task, Seq[ArtifactContent]] =
+      byTask(artifactRows)
+        .map { case (task, rs) =>
+          task -> rs.flatMap { r =>
+            val parsed = AttrCodec.parseMap(r.getMap[String, String](7).toMap)
             val name = parsed("name").asInstanceOf[String]
             val tpe = parsed("type").asInstanceOf[String]
             val content = SerializedData(tpe,
@@ -353,47 +338,43 @@ object SpanParser {
           }
         }
 
-      // B3 assembly: one TaskRunSummary per execute-task span, by start time
-      // (driver-side sort on parsed timestamps — same order as the previous
-      // cluster-side orderBy(to_timestamp, span_id)).
-      val taskRuns = extracted.getOrElse("tspan", Array.empty[Row]).toSeq
-        .sortBy(r => (safeEpochUs(r.getString(2)),
-          Option(r.getString(1)).getOrElse("")))
-        .map { r =>
-          val sid = r.getString(1)
-          val attrs = workflowAttributes ++ taskAttrs.getOrElse(sid, Map.empty)
-          val taskId = attrs.get("task.id") match {
-            case Some(s: String) => s
-            case other => throw new IllegalArgumentException(
-              s"task.id missing or not a string for task span $sid: $other")
-          }
-          TaskRunSummary(
-            spanId = sid,
-            parentSpanId = topSpanId,
-            taskId = taskId,
-            exceptions = taskExceptions.getOrElse(sid, Seq.empty),
-            attributes = attrs,
-            timing = Timing(r.getString(2), r.getString(3)),
-            loggedValues = taskValues.getOrElse(sid, Map.empty),
-            loggedArtifacts = taskArtifacts.getOrElse(sid, Seq.empty))
+    // B3 assembly: one TaskRunSummary per execute-task span, by parsed
+    // start time, then span id.
+    val taskRuns = taskSpans.toSeq
+      .sortBy(r => (safeEpochUs(r.getString(4)),
+        Option(r.getString(1)).getOrElse("")))
+      .map { r =>
+        val sid = r.getString(1)
+        val task = (r.getString(0), sid)
+        val attrs = workflowAttributes ++ taskAttrs.getOrElse(task, Map.empty)
+        val taskId = attrs.get("task.id") match {
+          case Some(s: String) => s
+          case other => throw new IllegalArgumentException(
+            s"task.id missing or not a string for task span $sid: $other")
         }
+        TaskRunSummary(
+          spanId = sid,
+          parentSpanId = topSpanId,
+          taskId = taskId,
+          exceptions = taskExceptions.getOrElse(task, Seq.empty),
+          attributes = attrs,
+          timing = Timing(r.getString(4), r.getString(5)),
+          loggedValues = taskValues.getOrElse(task, Map.empty),
+          loggedArtifacts = taskArtifacts.getOrElse(task, Seq.empty))
+      }
 
-      // B1 dependencies from the dep branch (attribute-form pairs)
-      val taskDependencies = extracted.getOrElse("dep", Array.empty[Row])
-        .map(r => (AttrCodec.parse(r.getString(2)).asInstanceOf[String],
-          AttrCodec.parse(r.getString(3)).asInstanceOf[String]))
-        .toSet
+    // B1 dependencies (attribute-form pairs)
+    val taskDependencies = depRaws.iterator
+      .map { case (f, t) => (AttrCodec.parse(f).asInstanceOf[String],
+        AttrCodec.parse(t).asInstanceOf[String]) }
+      .toSet
 
-      WorkflowSummary(
-        spanId = topSpanId,
-        timing = timing,
-        attributes = workflowAttributes,
-        taskRuns = taskRuns,
-        taskDependencies = taskDependencies)
-    } finally {
-      owned.unpersist(blocking = false)
-      pairs.unpersist(blocking = false)
-    }
+    WorkflowSummary(
+      spanId = topSpanId,
+      timing = timing,
+      attributes = workflowAttributes,
+      taskRuns = taskRuns,
+      taskDependencies = taskDependencies)
   }
 
   /** Single attribute value for `k` from its distinct raw renderings —
@@ -416,15 +397,6 @@ object SpanParser {
     else try graft.model.TimeFns.iso8601ToEpochUs(s)
     catch { case _: RuntimeException | _: java.time.DateTimeException => Long.MinValue }
 
-  /** [[payloadDF]]'s filter applied to an already-materialized
-    * spans⋈ownership join. */
-  private def payloadFromOwned(owned: DataFrame, spanName: String): DataFrame =
-    owned
-      .filterNested(Seq("name"), spanName)
-      .filterNested(Seq("status", "status_code"), "OK")
-      .select(col("task_span_id"), col("context.span_id").as("span_id"),
-        col("start_time"), col("attributes"))
-
   /** B9-style flat task-run DataFrame (for sinks/relational queries over
     * many runs) — everything driver-sized stripped of artifact payloads.
     *
@@ -437,8 +409,7 @@ object SpanParser {
     * SLOWER in round 14, so the fix is structural, like the gate folds).
     * Now ONE narrow per-span projection is grouped by trace once and
     * [[TaskRunsGen]] does the ownership walk AND the exception
-    * attribution in the same in-memory pass that [[taggedSpans]] already
-    * does for the pairs view. Parity with the old three-branch shape is
+    * attribution in one in-memory [[SpanTree]] pass per trace. Parity with the old three-branch shape is
     * pinned by ParserSpec ("fused == unfused on nested tasks/cycles"). */
   def taskRunsDF(spans: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
@@ -490,11 +461,10 @@ object SpanParser {
   }
 
   /** Generator emitting one task-run row per `execute-task` span of one
-    * trace, with exception events attributed through the SAME inclusive
-    * ancestor walk as [[OwnershipGen]] — including its edge semantics:
-    * null span ids own and are owned by nothing (a null-sid task still
-    * emits its row, with 0 exceptions), cycles terminate via the visited
-    * set, and a duplicated sid multiplies pair occurrences exactly like
+    * trace, with exception events attributed through the [[SpanTree]]
+    * walk — including its edge semantics: null span ids own and are owned
+    * by nothing (a null-sid task still emits its row, with 0 exceptions),
+    * cycles terminate via the visited set, and a duplicated sid multiplies pair occurrences exactly like
     * the old pairs⋈events join did (per-occurrence walk × per-sid event
     * total). Input: `array<struct<sid, parent_id, is_task, n_exc,
     * start_time, end_time, task_id>>`. */
@@ -517,50 +487,33 @@ object SpanParser {
       val arr = child.eval(input)
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       val n = arr.numElements()
-      val parentOf = new java.util.HashMap[String, String](n * 2)
-      val isTask = new java.util.HashSet[String]()
+      val tree = new SpanTree
+      val ids = new Array[String](n)
       val totalExc = new java.util.HashMap[String, Long]()
       var i = 0
       while (i < n) {
         val e = arr.getStruct(i, 7)
-        if (!e.isNullAt(0)) {
-          val sid = e.getUTF8String(0).toString
-          if (!e.isNullAt(1)) parentOf.put(sid, e.getUTF8String(1).toString)
-          if (!e.isNullAt(2) && e.getBoolean(2)) isTask.add(sid)
-          val ne = e.getLong(3)
-          if (ne > 0)
-            totalExc.merge(sid, ne, (a: Long, b: Long) => a + b)
-        }
+        ids(i) = tree.add(e)
+        if (ids(i) != null && e.getLong(3) > 0)
+          totalExc.merge(ids(i), e.getLong(3), (a: Long, b: Long) => a + b)
         i += 1
       }
       // per-task exception totals: every span OCCURRENCE with events walks
       // its inclusive ancestors (occurrences × per-sid totals = exactly
       // the old join's multiplicity)
       val taskExc = new java.util.HashMap[String, Long]()
-      i = 0
-      while (i < n) {
-        val e = arr.getStruct(i, 7)
-        if (!e.isNullAt(0)) {
-          val sid = e.getUTF8String(0).toString
-          val tot = totalExc.getOrDefault(sid, 0L)
-          if (tot > 0) {
-            val visited = new java.util.HashSet[String]()
-            var cur: String = sid
-            while (cur != null && visited.add(cur)) {
-              if (isTask.contains(cur))
-                taskExc.merge(cur, tot, (a: Long, b: Long) => a + b)
-              cur = parentOf.get(cur)
-            }
-          }
+      ids.foreach { sid =>
+        val tot = if (sid == null) 0L else totalExc.getOrDefault(sid, 0L)
+        if (tot > 0) tree.foreachOwner(sid) { t =>
+          taskExc.merge(t, tot, (a: Long, b: Long) => a + b)
         }
-        i += 1
       }
       val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       i = 0
       while (i < n) {
         val e = arr.getStruct(i, 7)
         if (!e.isNullAt(2) && e.getBoolean(2)) {
-          val sid = if (e.isNullAt(0)) null else e.getUTF8String(0).toString
+          val sid = ids(i)
           def s(idx: Int): UTF8String =
             if (e.isNullAt(idx)) null
             else UTF8String.fromString(e.getUTF8String(idx).toString)

@@ -197,9 +197,7 @@ class ParserSpec extends AnyFunSuite {
     assert(s.taskRuns.forall(_.parentSpanId == "0xrun42"))
   }
 
-  test("ownership tagging: nested tasks, multiple traces, null names, " +
-    "cycles — grouped walk agrees with iterative variant") {
-    import graft.model.{SpanContextRow, SpanRow, SpanStatusRow}
+  test("ownership pairs: nested tasks, traces, null names, cycles") {
     // trace A: task t1 with NESTED task t2 under it (a span below t2 must
     // be owned by BOTH); plus a null-name leaf; trace B: its own task.
     val spansA = Seq(
@@ -220,15 +218,163 @@ class ParserSpec extends AnyFunSuite {
       span("b", "0xc2", Some("0xc1"), traceId = "0xC"))
     val df = graft.model.SpanModel.toDF(spark, spansA ++ cycle)
 
-    def pairs(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val grouped = pairs(SpanParser.taggedSpans(df))
-    val iterative = pairs(SpanParser.taggedSpansIterative(df))
-    assert(grouped == iterative)
-    assert(grouped.contains(("0xt1", "0xleaf")) && grouped.contains(("0xt2", "0xleaf")))
-    assert(grouped.contains(("0xt1", "0xnull")))
-    assert(grouped.contains(("0xt3", "0xt3")))
-    assert(!grouped.exists(_._2 == "0xc1")) // cycle terminates, owns nothing
+    val pairs = SpanParser.taggedSpans(df).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    // each span is paired with every execute-task ancestor, itself
+    // included, exactly once; the cycle terminates and owns nothing
+    assert(pairs.sorted == Seq(
+      ("0xt1", "0xleaf"), ("0xt1", "0xnull"), ("0xt1", "0xt1"),
+      ("0xt1", "0xt2"), ("0xt2", "0xleaf"), ("0xt2", "0xt2"),
+      ("0xt3", "0xt3")))
+  }
+
+  /** One frame holding most of the parse's edge cases. Trace 0xA: task 0xo
+    * with task 0xi nested inside it (both `task.id` "job" — the subtree
+    * attribute union would otherwise conflict), a value, an artifact and an
+    * exception under 0xi, an exception directly under 0xo, an ERROR-status
+    * value, a null-name span, a null-id span carrying an exception and the
+    * earliest start time, and a dependency span. Trace 0xB: task 0xb1 with a
+    * child that reuses 0xA's span id 0xe1. Trace 0xC: a parent_id cycle
+    * holding the latest end time. */
+  def edgeSpans: Seq[graft.model.SpanRow] = {
+    def t(s: String) = s"2021-01-01T00:00:$s"
+    Seq(
+      span("dag-top-span", "0xtop", None, traceId = "0xA",
+        start = t("00.000000Z"), end = t("30.000000Z"),
+        attrs = Map("workflow.env" -> "e")),
+      span("execute-task", "0xo", Some("0xtop"), traceId = "0xA",
+        start = t("01.000000Z"), end = t("20.000000Z"), status = "OK",
+        attrs = Map("task.id" -> "job", "task.type" -> "python",
+          "workflow.env" -> "e")),
+      span("execute-task", "0xi", Some("0xo"), traceId = "0xA",
+        start = t("02.000000Z"), end = t("10.000000Z"),
+        attrs = Map("task.id" -> "job", "task.inner" -> "yes")),
+      span("named-value", "0xv", Some("0xi"), traceId = "0xA",
+        start = t("03.000000Z"), end = t("03.100000Z"), status = "OK",
+        attrs = Map("name" -> "x", "type" -> "int", "encoding" -> "json",
+          "content_encoded" -> "1")),
+      // same name as 0xv: counted, it would be a duplicate
+      span("named-value", "0xverr", Some("0xi"), traceId = "0xA",
+        start = t("03.500000Z"), end = t("03.600000Z"), status = "ERROR",
+        attrs = Map("name" -> "x", "type" -> "int", "encoding" -> "json",
+          "content_encoded" -> "2")),
+      // listed before 0xe1 but started after it
+      span("call", "0xe2", Some("0xo"), traceId = "0xA",
+        start = t("05.000000Z"), end = t("05.100000Z"),
+        events = Seq(exceptionEvent("outer boom"))),
+      span("call", "0xe1", Some("0xi"), traceId = "0xA",
+        start = t("04.000000Z"), end = t("04.100000Z"),
+        events = Seq(exceptionEvent("inner boom"))),
+      span("x", "0xn", Some("0xi"), traceId = "0xA",
+        start = t("04.500000Z"), end = t("04.600000Z"),
+        attrs = Map("task.note" -> "n")).copy(name = null),
+      span("orphan", "0xnull", Some("0xi"), traceId = "0xA",
+        start = "2020-12-31T23:59:59.000000Z", end = t("01.000000Z"),
+        attrs = Map("workflow.env" -> "e"),
+        events = Seq(exceptionEvent("orphan")))
+        .copy(context = graft.model.SpanContextRow("0xA", null, "[]")),
+      span("artefact", "0xart", Some("0xi"), traceId = "0xA",
+        start = t("06.000000Z"), end = t("06.100000Z"), status = "OK",
+        attrs = Map("name" -> "r.txt", "type" -> "utf-8",
+          "encoding" -> "utf-8", "content_encoded" -> "hi")),
+      span("task-dependency", "0xd", Some("0xtop"), traceId = "0xA",
+        start = t("00.500000Z"), end = t("00.600000Z"),
+        attrs = Map("from_task_span_id" -> "0xb1", "to_task_span_id" -> "0xo")),
+      span("execute-task", "0xb1", None, traceId = "0xB",
+        start = t("06.000000Z"), end = t("07.000000Z"),
+        attrs = Map("task.id" -> "solo")),
+      span("call", "0xe1", Some("0xb1"), traceId = "0xB",
+        start = t("06.500000Z"), end = t("06.600000Z"),
+        events = Seq(exceptionEvent("b boom"))),
+      span("a", "0xc1", Some("0xc2"), traceId = "0xC",
+        start = t("08.000000Z"), end = t("08.100000Z"),
+        events = Seq(exceptionEvent("cyclic"))),
+      span("b", "0xc2", Some("0xc1"), traceId = "0xC",
+        start = t("08.000000Z"), end = t("40.000000Z")))
+  }
+
+  test("parseSpans edge cases: nesting, traces, cycles, nulls, conflict") {
+    val df = SpanModel.toDF(spark, edgeSpans)
+    val s = SpanParser.parseSpans(df)
+    assert(s.attributes == Map("workflow.env" -> "e"))
+    assert(s.spanId.startsWith("NO-TOP-SPAN--TEMP"))
+    // every span counts, the null-id one and the cycle included
+    assert(s.timing == graft.parser.Timing(
+      "2020-12-31T23:59:59.000000Z", "2021-01-01T00:00:40.000000Z"))
+    assert(s.taskDependencies == Set(("0xb1", "0xo")))
+
+    assert(s.taskRuns.map(r => (r.spanId, r.taskId)) ==
+      Seq(("0xo", "job"), ("0xi", "job"), ("0xb1", "solo")))
+    val Seq(outer, inner, solo) = s.taskRuns
+    // the null-name span's task.* key reaches both enclosing tasks
+    assert(outer.attributes == Map("workflow.env" -> "e", "task.id" -> "job",
+      "task.type" -> "python", "task.inner" -> "yes", "task.note" -> "n"))
+    assert(inner.attributes == Map("workflow.env" -> "e", "task.id" -> "job",
+      "task.inner" -> "yes", "task.note" -> "n"))
+    assert(solo.attributes == Map("workflow.env" -> "e", "task.id" -> "solo"))
+    assert(solo.timing == graft.parser.Timing(
+      "2021-01-01T00:00:06.000000Z", "2021-01-01T00:00:07.000000Z"))
+
+    def messages(r: graft.parser.TaskRunSummary) = r.exceptions.map(e =>
+      e("attributes").asInstanceOf[Map[String, Any]]("exception.message"))
+    // by the emitting span's start time; the null-id span's exception and
+    // the cycle's belong to no task; ownership is keyed by (trace, span
+    // id), so 0xB's reuse of 0xe1 stays in 0xB
+    assert(messages(outer) == Seq("inner boom", "outer boom"))
+    assert(messages(inner) == Seq("inner boom"))
+    assert(messages(solo) == Seq("b boom"))
+    assert(outer.exceptions.head("name") == "exception")
+    // the flat view attributes the same exceptions
+    val nExc = SpanParser.taskRunsDF(df).collect()
+      .map(r => r.getAs[String]("task_span_id") -> r.getAs[Long]("n_exceptions"))
+      .toMap
+    assert(nExc == s.taskRuns.map(r => r.spanId -> r.exceptions.size.toLong).toMap)
+
+    // the nested value and artifact belong to both tasks; the ERROR-status
+    // value is skipped
+    val x = Map("x" -> graft.parser.LoggedValueContent("int", 1L))
+    assert(outer.loggedValues == x && inner.loggedValues == x)
+    assert(solo.loggedValues.isEmpty)
+    assert(outer.loggedArtifacts == inner.loggedArtifacts)
+    assert(outer.loggedArtifacts.map(a => (a.name, a.content)) ==
+      Seq(("r.txt", "hi")))
+    assert(solo.loggedArtifacts.isEmpty)
+
+    // a task.* key bound to two values inside one subtree
+    val conflict = edgeSpans :+ span("call", "0xk", Some("0xi"),
+      traceId = "0xA", start = "2021-01-01T00:00:09.000000Z",
+      attrs = Map("task.id" -> "other"))
+    val e = intercept[IllegalArgumentException](
+      SpanParser.parseSpans(SpanModel.toDF(spark, conflict)))
+    assert(e.getMessage ==
+      "Encountered key=task.id with different values job and other")
+  }
+
+  test("parseSpans submits exactly one Spark job") {
+    // budget: the parse is one collect of a per-span projection (it was
+    // 14 jobs: shuffles, a count, persisted joins and a global aggregate)
+    val path = java.nio.file.Files.createTempDirectory("parse-budget")
+      .resolve("spans.jsonl").toString
+    val sink = new graft.exec.SpanSink
+    withLinks.foreach(sink.add)
+    sink.writeJsonl(path)
+    val df = graft.spans.SpanSource.readJsonl(spark, path)
+    var s: graft.parser.WorkflowSummary = null
+    val jobs = org.apache.spark.JobCount(spark.sparkContext) {
+      s = SpanParser.parseSpans(df)
+    }
+    assert(jobs == 1)
+    assert(s.taskRuns.map(_.taskId) == Seq("ingest", "train"))
+  }
+
+  test("parseSpans leaves a caller's cache in place") {
+    val df = SpanModel.toDF(spark, workflowSpans).cache()
+    try {
+      df.count()
+      SpanParser.parseSpans(df)
+      assert(spark.sharedState.cacheManager.lookupCachedData(
+        df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]).isDefined)
+    } finally df.unpersist()
   }
 
   test("B9 taskRunsDF flat view") {
